@@ -12,10 +12,11 @@ Two scalable constructions live here; the operators pick automatically:
 LITERALS for the leading (numeric/date/timestamp) order column. Each
 row's bucket is then a PURE FUNCTION of its own values — deterministic
 across jobs and executor failures with no checkpoint — so the
-construction is: bucket counts (small aggregate, map-side partials) →
-explode-based prefix fold (lazy, no collect, no single-partition
-window) → global index = bucket offset + ``row_number`` over a window
-PARTITIONED by bucket (fully parallel). Equal rows share a
+construction is: bucket counts (one small aggregate, map-side
+partials, collected to the driver — bounded by the bucket count) →
+prefix-sum offsets attached as a literal map → global index = bucket
+offset + ``row_number`` over a window PARTITIONED by bucket (fully
+parallel). Equal rows share a
 bucket (boundaries compare strictly), so within-bucket tiebreak order
 composes into the exact total order. Boundary accuracy only affects
 bucket BALANCE, never correctness; a single hot value concentrates its
@@ -144,15 +145,6 @@ def _bucket_sort_key(df: DataFrame, col_name: str) -> Column | None:
         return F.col(col_name).cast("double")
     return None
 
-
-#: bucket-offset attachment strategy (r13 A/B knob): True = ONE
-#: groupBy(__pid).count() collect + literal map (the r12 shape — fewer
-#: exchanges/jobs, but an extra BLOCKING driver action per index build
-#: that serializes ahead of the final pass); False = the lazy
-#: explode-fold (:func:`_bucket_offsets`) broadcast back — no driver
-#: round trip, two extra bucket-grain (≤65k-row) exchanges. Both are
-#: scale-clean; the choice is empirical (tools/ab_profile.py).
-OFFSETS_VIA_COLLECT = True
 
 #: fine-chunk width of the two-level coarse→fine bucket lookup; also
 #: the cutoff below which the single-level unrolled comparison is used
@@ -393,14 +385,12 @@ def multi_windowed_adjacent_pairs(
     for k, ((order_cols, _bnd), (with_pid, _mx)) in enumerate(
         zip(passes, bucketed)
     ):
-        offsets: dict[int, int] = {}
-        running = 0
-        for pid in sorted(per_pass[k]):
-            offsets[pid] = running
-            running += per_pass[k][pid]
         out.append(
             _pairs_from_offd(
-                _attach_offset(with_pid, offsets), order_cols, window, id_col
+                _attach_offset(with_pid, _prefix_offsets(per_pass[k])),
+                order_cols,
+                window,
+                id_col,
             )
         )
     return out
@@ -449,38 +439,13 @@ def stable_global_index(
         # (measured: 9–10 → ~5 jobs per call on the sf0.1 bench; the
         # counts pass doubles as the persist materialization the first
         # consumer paid anyway).
-        with_pid, max_pid = bucketed
+        with_pid, _ = bucketed
         if offsets is not None:
             # the caller's probe already produced exact offsets in the
             # same action as the boundaries — zero extra jobs here
             offd = _attach_offset(with_pid, offsets)
-        elif OFFSETS_VIA_COLLECT:
-            counts = {
-                r["__pid"]: r["__c"]
-                for r in with_pid.groupBy("__pid")
-                .agg(F.count(F.lit(1)).alias("__c"))
-                .collect()
-            }
-            offsets = {}
-            running = 0
-            for pid in sorted(counts):
-                offsets[pid] = running
-                running += counts[pid]
-            offd = _attach_offset(with_pid, offsets)
         else:
-            # lazy explode-fold offsets (the pre-r12 shape): no driver
-            # collect, no extra blocking action — the bucket-grain
-            # counts fold broadcasts back (left join: the minimum
-            # bucket has no offset row)
-            offd = with_pid.join(
-                _bucket_offsets(
-                    with_pid,
-                    [F.count(F.lit(1)).cast("bigint").alias("__off")],
-                    max_pid,
-                ),
-                "__pid",
-                "left",
-            )
+            offd = _attach_offset(with_pid, _collected_offsets(with_pid))
         return (
             offd.withColumn(
                 # widen BEFORE adding: int32 row_number wraps negative
@@ -498,17 +463,8 @@ def stable_global_index(
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint()
     )
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in with_pid.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets = {}
-    running = 0
-    for pid in sorted(counts):
-        offsets[pid] = running
-        running += counts[pid]
-
-    indexed = _attach_offset(with_pid, offsets).withColumn(
+    offd = _attach_offset(with_pid, _collected_offsets(with_pid))
+    indexed = offd.withColumn(
         out_col,
         F.col("__off").cast("bigint") + F.row_number().over(w).cast("bigint"),
     )
@@ -581,30 +537,8 @@ def windowed_adjacent_pairs(
             F.col("__rn").alias("__rn_b"), F.col(id_col).alias("id_b")
         )
         return probe.join(build, "__rn_b").select("id_a", "id_b")
-    with_pid, max_pid = bucketed
-    if OFFSETS_VIA_COLLECT:
-        counts = {
-            r["__pid"]: r["__c"]
-            for r in with_pid.groupBy("__pid")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .collect()
-        }
-        offsets: dict[int, int] = {}
-        running = 0
-        for pid in sorted(counts):
-            offsets[pid] = running
-            running += counts[pid]
-        offd = _attach_offset(with_pid, offsets)
-    else:
-        offd = with_pid.join(
-            _bucket_offsets(
-                with_pid,
-                [F.count(F.lit(1)).cast("bigint").alias("__off")],
-                max_pid,
-            ),
-            "__pid",
-            "left",
-        )
+    with_pid, _ = bucketed
+    offd = _attach_offset(with_pid, _collected_offsets(with_pid))
     return _pairs_from_offd(offd, order_cols, window, id_col)
 
 
@@ -740,6 +674,29 @@ def _bucket_offsets(
 #: create_map (serialized-plan size and expression depth grow O(n)) to
 #: a broadcast hash join against a tiny (pid, offset) frame
 _MAX_LITERAL_OFFSETS = 4096
+
+
+def _prefix_offsets(counts: dict[int, int]) -> dict[int, int]:
+    """Each ``__pid``'s offset: the row count of every lower pid."""
+    offsets: dict[int, int] = {}
+    running = 0
+    for pid in sorted(counts):
+        offsets[pid] = running
+        running += counts[pid]
+    return offsets
+
+
+def _collected_offsets(with_pid: DataFrame) -> dict[int, int]:
+    """Bucket offsets from ONE ``groupBy(__pid).count()`` collect. The
+    collect is bounded by the bucket count, and the counts are exact,
+    so the driver prefix sum is bit-identical to a shuffled fold."""
+    counts = {
+        r["__pid"]: r["__c"]
+        for r in with_pid.groupBy("__pid")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .collect()
+    }
+    return _prefix_offsets(counts)
 
 
 def _attach_offset(with_pid: DataFrame, offsets: dict) -> DataFrame:

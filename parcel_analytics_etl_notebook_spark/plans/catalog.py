@@ -295,32 +295,26 @@ def _ensure_loaded() -> None:
         queries_relational25,
         queries_relational26,
         queries_relational27,
+        queries_llm,
+        queries_llm2,
+        queries_llm3,
+        queries_llm4,
+        queries_llm5,
+        queries_llm6,
+        queries_llm7,
+        queries_llm8,
+        queries_llm9,
+        queries_llm10,
+        queries_llm11,
+        queries_llm12,
+        queries_llm13,
+        queries_llm14,
+        queries_llm15,
+        queries_llm16,
+        queries_llm17,
+        queries_llm18,
+        queries_llm19,
     )
-
-    try:
-        from parcel_analytics_etl_notebook_spark.plans import (  # noqa: F401
-            queries_llm,
-            queries_llm2,
-            queries_llm3,
-            queries_llm4,
-            queries_llm5,
-            queries_llm6,
-            queries_llm7,
-            queries_llm8,
-            queries_llm9,
-            queries_llm10,
-            queries_llm11,
-            queries_llm12,
-            queries_llm13,
-            queries_llm14,
-            queries_llm15,
-            queries_llm16,
-            queries_llm17,
-            queries_llm18,
-            queries_llm19,
-        )
-    except ImportError:
-        pass
     front = [n for n in _front_order() if n in _REGISTRY]
     rest = [n for n in _REGISTRY if n not in set(front)]
     _REGISTRY = {n: _REGISTRY[n] for n in front + rest}

@@ -47,10 +47,6 @@ from parcel_analytics_etl_notebook_spark.plans.queries_llm import (
 #: everything else is the standing corpus.
 _BATCH_MOD = 10
 
-#: r13 A/B knob for the r12-added capped-index persist in
-#: simhash64_near_dup_pairs (VERDICT r12 #2 adjudication)
-R12_PERSIST_CAPPED = True
-
 
 # --------------------------------------------------------------------------
 # 64-bit SimHash near-dup pairs (4×16-bit bands — VERDICT r08 #2)
@@ -148,12 +144,10 @@ def simhash64_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__n") > MAX_LSH_BUCKET)
         .select("band", "val")
     )
-    # persist the capped long index (r12): both self-join sides read
-    # it, so the melt + hot-bucket aggregate + anti-join otherwise run
-    # once per side (r13 A/B knob — VERDICT r12 #2 adjudication)
-    capped = long.join(hot, on=["band", "val"], how="left_anti")
-    if R12_PERSIST_CAPPED:
-        capped = capped.persist()
+    # persist the capped long index: both self-join sides read it, so
+    # the melt + hot-bucket aggregate + anti-join otherwise run once
+    # per side
+    capped = long.join(hot, on=["band", "val"], how="left_anti").persist()
     a, b = capped.alias("a"), capped.alias("b")
     cand = (
         a.join(

@@ -1066,11 +1066,6 @@ _WINNOW_W = 4
 #: carry no pairing signal, same argument as drop_hot_shingles
 _WINNOW_MAX_DF = 64
 
-#: r13 A/B knob for the r12-added capped-index persist (VERDICT r12 #2:
-#: the claimed ~1s win never showed on an independent run — adjudicate
-#: with the interleaved same-session protocol, keep only if it wins)
-R12_PERSIST_CAPPED = True
-
 
 @register(
     "winnowing_fingerprint_pairs",
@@ -1149,12 +1144,11 @@ def winnowing_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = sh.select(
         "doc_id", F.explode(F.array_distinct(wins)).alias("f")
     ).persist()
-    # persist the CAPPED index too (r12): both self-join sides read it,
-    # so the df-count aggregate + anti-join otherwise run once per side
-    # (r13 A/B knob — VERDICT r12 #2 adjudication)
-    capped = drop_hot_shingles(fp, shingle_col="f", max_df=_WINNOW_MAX_DF)
-    if R12_PERSIST_CAPPED:
-        capped = capped.persist()
+    # persist the CAPPED index too: both self-join sides read it, so
+    # the df-count aggregate + anti-join otherwise run once per side
+    capped = drop_hot_shingles(
+        fp, shingle_col="f", max_df=_WINNOW_MAX_DF
+    ).persist()
     a, b = capped.alias("a"), capped.alias("b")
     return (
         a.join(

@@ -137,10 +137,6 @@ class CandidateBudgetExceeded(RuntimeError):
 #: byte-identical, the quadratic regime fails fast.
 PREFIX_CANDIDATE_BUDGET = 2_000_000
 
-#: r13 A/B knob for the r12-added prefix-frame persist (VERDICT r12 #2
-#: adjudication — interleaved same-session protocol)
-R12_PERSIST_PREFIX = True
-
 
 def prefix_filter_pairs(
     docs: DataFrame,
@@ -171,13 +167,11 @@ def prefix_filter_pairs(
             F.array_distinct(shingle_hashes_from_tokens(F.col("__th"), 3))
         ).alias("shingle"),
     ).persist()  # inverted index: referenced by df, prefix, and verify
-    # persist the PREFIX frame too (r12 opt): the budget probe and BOTH
-    # sides of the candidate self-join read it, so without the barrier
-    # the df-groupBy + join + per-doc ranking window subtree is planned
-    # and executed three times per run (r13 A/B knob — VERDICT r12 #2)
-    prefix = _prefix_frame(sh)
-    if R12_PERSIST_PREFIX:
-        prefix = prefix.persist()
+    # persist the PREFIX frame too: the budget probe and BOTH sides of
+    # the candidate self-join read it, so without the barrier the
+    # df-groupBy + join + per-doc ranking window subtree is planned and
+    # executed three times per run
+    prefix = _prefix_frame(sh).persist()
     if candidate_budget is not None:
         est = _prefix_candidate_bound(prefix)
         if est > candidate_budget:

@@ -2,11 +2,20 @@
 (``plans/queries_llm19.incremental_lsh_apply_delta``) as an actual
 Structured Streaming pipeline.
 
-Each document micro-batch probes the STANDING corpus state (banded
-MinHash signatures + verified shingle sets, both append-only parquet
-tables) for LSH bucket collisions, verifies candidates with exact
-Jaccard, appends the verified pair DELTA to the pair table, then
-appends its own bands/sets to the standing state — exactly the
+State is two append-only parquet tables under one root:
+
+- ``docs``: one row per document arrival, ``(doc_id, wb, minhash,
+  sh_set, n)`` — the write batch, the MinHash signature and the
+  distinct-shingle set with its size. A doc's LIVE row is the one with
+  its max ``wb``.
+- ``pairs``: ``(id_a, id_b, jaccard, batch_id)`` verified near-dup
+  pairs, each written by the micro-batch that completed it.
+
+Each document micro-batch bands its own rows plus the live standing
+rows (:func:`lsh_banded`, uncapped), joins the batch's bucket keys
+against them, verifies candidates with exact Jaccard over the shingle
+sets those same rows carry, appends the verified pair DELTA to
+``pairs``, then appends its own rows to ``docs`` — the
 ``pairs' = pairs ∪ delta`` semantics, executed per micro-batch via
 ``foreachBatch`` (the loop is stateful across batches through the
 tables themselves, the standard pattern for state larger than the
@@ -21,29 +30,30 @@ batch self-join recompute, in any arrival order. That order-
 independence is what makes the maintenance loop trustworthy: a
 backfill + N daily deltas ends byte-identical to recompute-the-world.
 
-RE-CRAWLS (same doc_id, new text) are first-class: state rows carry
-their write batch (``wb``) and a doc-grain version ledger records each
-arrival, so a re-crawled doc's old bands/sets/pairs are superseded at
-read time (:func:`_live_rows` / :func:`live_pairs`) and physically
-dropped by the periodic :func:`compact_state` — the log-structured
-upsert pattern for append-only parquet state. A re-crawl batch probes
-with the NEW fingerprint, so stale pairs die and still-valid ones are
-re-emitted in the same batch.
+RE-CRAWLS (same doc_id, new text) are first-class: the re-crawl's
+``docs`` row supersedes the old one at read time (:func:`_live_rows`),
+and :func:`live_pairs` drops every pair written before either of its
+docs' latest arrival. The re-crawl batch probes with the NEW
+fingerprint, so stale pairs die and still-valid ones are re-emitted in
+the same batch. The periodic :func:`compact_state` physically drops the
+dead rows — the log-structured upsert pattern for append-only parquet.
 
-Scale shape per micro-batch: banding the batch is O(batch); the
-candidate join shuffles the batch's bucket keys against the standing
-bands table — at 100 TB that table is bucketed parquet (written by the
-backfill, bucket-pruned by the batch's keys), so the probe is
-O(batch × bucket occupancy), never O(corpus). The pair/bands/sets
-appends are O(batch); the version ledger is doc-grain and broadcasts.
-Nothing rescans the corpus.
+Scale shape per micro-batch: the ``pairs`` and ``docs`` appends are
+O(batch). The probe is not: each batch scans the whole standing
+``docs`` table, shuffles it by doc_id to keep each doc's live row,
+bands it and joins it against the batch's bucket keys, because nothing
+is bucket-pruned today. That is O(corpus) per batch, as it was with
+the earlier four-table layout; pruning the standing read by the
+batch's bucket keys (a bucketed band table) is the change that would
+make the probe O(batch × bucket occupancy).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from parcel_analytics_etl_notebook_spark.functions.textfns import tokens
@@ -55,60 +65,21 @@ from parcel_analytics_etl_notebook_spark.operators.dedup_fuzzy import (
 )
 
 #: standing-state subdirectories under the maintenance root
-BANDS_DIR, SETS_DIR, PAIRS_DIR = "bands", "sets", "pairs"
-#: doc-grain version ledger: one (doc_id, wb) row per arrival; a doc's
-#: LIVE version is its max wb. This is what makes RE-CRAWLS (same id,
-#: new text) correct on append-only parquet: old bands/sets/pairs are
-#: never deleted in place — they are superseded at read time (the
-#: log-structured-store pattern; :func:`compact_state` is the periodic
-#: rewrite that physically drops dead rows).
-VERSIONS_DIR = "versions"
-
-
-def _batch_bands(docs: DataFrame) -> DataFrame:
-    """(doc_id, band, sig_band) rows for a batch — the bucket keys the
-    batch probes and then contributes to the standing table. No
-    hot-bucket cap here: capping is a per-PROBE cost decision (see
-    apply-delta's per-population recount); the maintenance default
-    keeps recall exact so the convergence property holds.
-
-    ``persist=False``: the caller persists the (wb-stamped) result
-    itself, and a continuously-running stream must not leak one
-    internally-cached banded frame per micro-batch (ADVICE r09 #3 —
-    ``lsh_banded``'s default persist is for batch callers that rely on
-    bench-style ``clearCache`` between queries)."""
-    sig = with_minhash(docs, num_hashes=16)
-    return lsh_banded(
-        sig, bands=4, sig_len=16, max_bucket=None, persist=False
-    ).select("doc_id", "band", "sig_band")
-
-
-def _versions_or_none(spark, versions_path: str) -> DataFrame | None:
-    """The version ledger, or ``None`` if it does not exist yet.
-
-    Crash-replay guard (ADVICE r09 #1): batch writes go delta → bands →
-    sets → versions, so a crash between the bands append and the
-    versions append leaves state tables WITHOUT a ledger. On checkpoint
-    replay that state is reachable only for the FIRST batch (later
-    batches find the ledger from their predecessors), and with no
-    completed versions append no re-crawl supersede has been recorded —
-    every standing row is live. Treating a missing ledger as
-    "everything live" is therefore exact, and it un-wedges the replay
-    instead of raising AnalysisException forever."""
-    if not os.path.isdir(versions_path):
-        return None
-    return spark.read.parquet(versions_path)
-
-
-def _live_or_all(rows: DataFrame, versions: DataFrame | None) -> DataFrame:
-    """:func:`_live_rows` when a ledger exists, identity when not."""
-    return rows if versions is None else _live_rows(rows, versions)
+DOCS_DIR, PAIRS_DIR = "docs", "pairs"
+#: both tables are read with these schemas (no inference job per read);
+#: the writers cast to them
+SCHEMAS = {
+    DOCS_DIR: "doc_id bigint, wb bigint, minhash array<bigint>, "
+    "sh_set array<bigint>, n bigint",
+    PAIRS_DIR: "id_a bigint, id_b bigint, jaccard double, batch_id bigint",
+}
 
 
 def _batch_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, sh_set, n) distinct-shingle sets for exact-Jaccard
     verification. Uncapped: the set definition must be corpus-
-    independent so a pair verifies identically whenever it is found."""
+    independent so a pair verifies identically whenever it is found.
+    Docs with fewer than 3 tokens have no shingles and no row."""
     nparts = docs.sparkSession.sparkContext.defaultParallelism
     tok_hashes = F.transform(tokens("text"), lambda t: poly_hash(t))
     th = docs.select("doc_id", tok_hashes.alias("__th")).repartition(nparts)
@@ -124,123 +95,118 @@ def _batch_sets(docs: DataFrame) -> DataFrame:
     )
 
 
+def _batch_rows(docs: DataFrame, batch_id: int) -> DataFrame:
+    """The batch's ``docs`` rows, cast to the ``docs`` schema. A LEFT
+    join: a doc with fewer than 3 tokens still gets a row (empty set,
+    ``n = 0``), so a re-crawl to short text supersedes the doc's old
+    row and kills its old pairs."""
+    sig = with_minhash(docs, num_hashes=16)
+    return sig.join(_batch_sets(docs), "doc_id", "left").select(
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        F.lit(batch_id).cast("bigint").alias("wb"),
+        F.col("minhash").cast("array<bigint>").alias("minhash"),
+        F.coalesce("sh_set", F.array().cast("array<bigint>")).alias("sh_set"),
+        F.coalesce("n", F.lit(0)).cast("bigint").alias("n"),
+    )
+
+
+def _read(spark, state_root: str, sub: str) -> DataFrame:
+    path = os.path.join(state_root, sub)
+    return spark.read.schema(SCHEMAS[sub]).parquet(path)
+
+
+def _live_rows(docs: DataFrame) -> DataFrame:
+    """Read-time reconciliation: keep each doc's row from its LATEST
+    arrival (max wb). Append-only parquet cannot delete superseded
+    rows in place; this filter is the log-structured-store read path
+    and :func:`compact_state` the physical cleanup."""
+    latest = F.max("wb").over(Window.partitionBy("doc_id"))
+    return (
+        docs.withColumn("__latest", latest)
+        .filter(F.col("wb") == F.col("__latest"))
+        .drop("__latest")
+    )
+
+
+def _bands(rows: DataFrame) -> DataFrame:
+    """LSH band rows ``(doc, band, sig_band)`` of the docs that have
+    shingles. The doc's ``(doc_id, sh_set, n)`` rides along as the
+    banding id, so every candidate pair carries what exact-Jaccard
+    verification needs and no join back to the sets is required.
+
+    No hot-bucket cap: capping is a per-PROBE cost decision, and the
+    maintenance loop keeps recall exact so the convergence property
+    holds. ``persist=False``: a continuously-running stream must not
+    leak one cached banded frame per micro-batch (ADVICE r09 #3)."""
+    docs = rows.filter(F.col("n") > 0).select(
+        F.struct("doc_id", "sh_set", "n").alias("doc"), "minhash"
+    )
+    return lsh_banded(
+        docs, id_col="doc", bands=4, sig_len=16, max_bucket=None,
+        persist=False,
+    )
+
+
 def near_dup_maintenance_sink(state_root: str, threshold: float = 0.2):
-    """foreachBatch sink maintaining ``state_root/{bands,sets,pairs}``.
+    """foreachBatch sink maintaining ``state_root/{docs,pairs}``.
 
     Returns the (batch_df, batch_id) callable to pass to
     ``writeStream.foreachBatch``. Pair rows: (id_a, id_b, jaccard,
     batch_id) with id_a < id_b, unique across the stream's lifetime —
     every pair is emitted by exactly the micro-batch that completes it.
     """
-    bands_path = os.path.join(state_root, BANDS_DIR)
-    sets_path = os.path.join(state_root, SETS_DIR)
+    docs_path = os.path.join(state_root, DOCS_DIR)
     pairs_path = os.path.join(state_root, PAIRS_DIR)
-    versions_path = os.path.join(state_root, VERSIONS_DIR)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        docs = batch_df.select("doc_id", "text")
-        wb = F.lit(batch_id).cast("bigint")
-        nb = _batch_bands(docs).withColumn("wb", wb).persist()
-        ns = _batch_sets(docs).withColumn("wb", wb).persist()
-        batch_ids = docs.select("doc_id")
-
-        versions = _versions_or_none(spark, versions_path)
-        standing = None
-        if os.path.isdir(bands_path):
-            # live-version filter: a doc RE-CRAWLED by an earlier batch
-            # left its superseded bands in the append-only table; keep
-            # only each doc's max-wb rows. Then drop docs the CURRENT
-            # batch re-crawls — their new bands replace the old ones in
-            # this probe (versions for this batch are appended below).
-            # A missing ledger (crash before the first versions append)
-            # means all standing rows are live — see _versions_or_none.
-            standing = _live_or_all(
-                spark.read.parquet(bands_path), versions
-            ).join(batch_ids, on="doc_id", how="left_anti")
-        probe_target = (
-            nb if standing is None else nb.unionByName(standing)
-        )
-        a, b = nb.alias("a"), probe_target.alias("b")
-        cand = (
+        rows = _batch_rows(batch_df.select("doc_id", "text"), batch_id)
+        rows = rows.persist()
+        live = rows
+        if os.path.isdir(docs_path):
+            # a doc this batch re-crawls has its max wb in `rows`, so
+            # its new row supersedes the standing one here
+            live = _live_rows(
+                _read(spark, state_root, DOCS_DIR).unionByName(rows)
+            )
+        a, b = _bands(rows).alias("a"), _bands(live).alias("b")
+        shared = F.size(
+            F.array_intersect("a.doc.sh_set", "b.doc.sh_set")
+        ).cast("bigint")
+        jac = shared / (F.col("a.doc.n") + F.col("b.doc.n") - shared)
+        # a batch×standing pair is found only from the batch side, but a
+        # batch×batch pair appears from both docs' probes, and any pair
+        # from every band the two docs share — least/greatest +
+        # dropDuplicates collapses them. Pairs whose BOTH docs are
+        # standing cannot appear: neither side is in `a`.
+        delta = (
             a.join(
                 b,
                 (F.col("a.band") == F.col("b.band"))
                 & (F.col("a.sig_band") == F.col("b.sig_band"))
-                & (F.col("a.doc_id") != F.col("b.doc_id")),
+                & (F.col("a.doc.doc_id") != F.col("b.doc.doc_id")),
             )
-            .select(
-                F.least("a.doc_id", "b.doc_id").alias("id_a"),
-                F.greatest("a.doc_id", "b.doc_id").alias("id_b"),
-            )
-            .dropDuplicates()
-        )
-        # a batch×standing pair is found only from the batch side, but a
-        # batch×batch pair appears from both docs' probes — the
-        # least/greatest + dropDuplicates above collapses it. Pairs
-        # whose BOTH docs are standing cannot appear: neither side is
-        # in `a`.
-        all_sets = ns
-        if os.path.isdir(sets_path):
-            live_sets = _live_or_all(
-                spark.read.parquet(sets_path), versions
-            ).join(batch_ids, on="doc_id", how="left_anti")
-            all_sets = ns.unionByName(
-                live_sets.select("doc_id", "sh_set", "n", "wb")
-            )
-        sa = all_sets.select(
-            F.col("doc_id").alias("id_a"),
-            F.col("sh_set").alias("set_a"),
-            F.col("n").alias("na"),
-        )
-        sb = all_sets.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("sh_set").alias("set_b"),
-            F.col("n").alias("nb"),
-        )
-        shared = F.size(F.array_intersect("set_a", "set_b")).cast("bigint")
-        jac = shared / (F.col("na") + F.col("nb") - shared)
-        delta = (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
             .filter(jac >= threshold)
             .select(
-                "id_a",
-                "id_b",
+                F.least("a.doc.doc_id", "b.doc.doc_id").alias("id_a"),
+                F.greatest("a.doc.doc_id", "b.doc.doc_id").alias("id_b"),
                 F.round(jac, 4).alias("jaccard"),
                 F.lit(batch_id).cast("bigint").alias("batch_id"),
             )
+            .dropDuplicates(["id_a", "id_b"])
         )
-        # delta FIRST, then state, then versions: if the job dies
-        # mid-batch, replaying it re-emits the same delta rows (dedup
-        # on (id_a, id_b, batch_id) downstream) but never loses pairs a
-        # future batch would no longer find (its docs would already be
-        # standing, so the probe-side would skip them). Versions LAST:
-        # a re-crawl only supersedes old state once its replacement
-        # bands/sets are durably written.
+        # pairs FIRST, then docs — the docs append is the commit point.
+        # If the job dies between them, replaying the batch re-emits
+        # the same delta rows (live_pairs dedups on (id_a, id_b)) but
+        # never loses pairs a future batch would no longer find (its
+        # docs would already be standing, so the probe side would skip
+        # them). A re-crawl supersedes its old row only once the new
+        # row is durably written.
         delta.write.mode("append").parquet(pairs_path)
-        nb.write.mode("append").parquet(bands_path)
-        ns.select("doc_id", "sh_set", "n", "wb").write.mode(
-            "append"
-        ).parquet(sets_path)
-        batch_ids.withColumn("wb", wb).write.mode("append").parquet(
-            versions_path
-        )
-        nb.unpersist()
-        ns.unpersist()
+        rows.write.mode("append").parquet(docs_path)
+        rows.unpersist()
 
     return apply_batch
-
-
-def _live_rows(rows: DataFrame, versions: DataFrame) -> DataFrame:
-    """Read-time reconciliation: keep only each doc's rows from its
-    LATEST arrival (max wb in the version ledger). Append-only parquet
-    cannot delete superseded rows in place; this filter is the
-    log-structured-store read path and :func:`compact_state` the
-    physical cleanup. At 100 TB the ledger is doc-grain (tiny next to
-    the corpus) and broadcast-joins against the bucketed state table."""
-    latest = versions.groupBy("doc_id").agg(F.max("wb").alias("wb"))
-    return rows.join(latest, on=["doc_id", "wb"], how="inner")
 
 
 def live_pairs(spark, state_root: str) -> DataFrame:
@@ -249,33 +215,30 @@ def live_pairs(spark, state_root: str) -> DataFrame:
     new text) kills every stale pair of that doc at read time, and the
     re-crawl batch re-emits whichever pairs still verify against the
     new text. Unique on (id_a, id_b) by construction plus dedup (a
-    crash-replayed batch may append its delta twice). A missing ledger
-    (crash before the first versions append) means nothing has been
-    superseded — every appended pair is live (see _versions_or_none)."""
-    pairs = spark.read.parquet(os.path.join(state_root, PAIRS_DIR))
-    versions = _versions_or_none(
-        spark, os.path.join(state_root, VERSIONS_DIR)
-    )
-    if versions is None:
-        return pairs.select(
-            "id_a", "id_b", "jaccard", "batch_id"
-        ).dropDuplicates(["id_a", "id_b"])
-    latest = versions.groupBy("doc_id").agg(F.max("wb").alias("latest_wb"))
-    va = latest.select(
-        F.col("doc_id").alias("id_a"), F.col("latest_wb").alias("wa")
-    )
-    vb = latest.select(
-        F.col("doc_id").alias("id_b"), F.col("latest_wb").alias("wb2")
-    )
-    return (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
-        .filter(
-            (F.col("batch_id") >= F.col("wa"))
-            & (F.col("batch_id") >= F.col("wb2"))
+    crash-replayed batch may append its delta twice). A missing
+    ``docs`` table (crash after the first ``pairs`` append) means
+    nothing has been superseded — every appended pair is live."""
+    pairs = _read(spark, state_root, PAIRS_DIR)
+    if os.path.isdir(os.path.join(state_root, DOCS_DIR)):
+        latest = _read(spark, state_root, DOCS_DIR).groupBy("doc_id").agg(
+            F.max("wb").alias("latest_wb")
         )
-        .select("id_a", "id_b", "jaccard", "batch_id")
-        .dropDuplicates(["id_a", "id_b"])
+        va = latest.select(
+            F.col("doc_id").alias("id_a"), F.col("latest_wb").alias("wa")
+        )
+        vb = latest.select(
+            F.col("doc_id").alias("id_b"), F.col("latest_wb").alias("wb2")
+        )
+        pairs = (
+            pairs.join(va, "id_a")
+            .join(vb, "id_b")
+            .filter(
+                (F.col("batch_id") >= F.col("wa"))
+                & (F.col("batch_id") >= F.col("wb2"))
+            )
+        )
+    return pairs.select("id_a", "id_b", "jaccard", "batch_id").dropDuplicates(
+        ["id_a", "id_b"]
     )
 
 
@@ -288,8 +251,6 @@ def _swap_in(path: str) -> None:
     :func:`recover_state` restores or cleans up on startup. Each
     ``os.rename`` is atomic on POSIX; only the window BETWEEN them
     needs the recovery protocol."""
-    import shutil
-
     old = path + ".old"
     shutil.rmtree(old, ignore_errors=True)  # stale leftover, data is live
     os.rename(path, old)
@@ -301,7 +262,7 @@ def recover_state(state_root: str) -> None:
     """Repair a state root after a crash mid-:func:`compact_state`.
 
     Idempotent; call on startup (``run_maintenance_stream`` does, and
-    ``compact_state`` re-runs it before writing). Cases per subdir:
+    ``compact_state`` re-runs it before writing). Cases per table:
 
     - ``path`` exists → live. Any ``.compact`` is an unswapped rewrite
       of the same live rows (drop it); any ``.old`` is a superseded
@@ -310,9 +271,7 @@ def recover_state(state_root: str) -> None:
       renames. If ``.compact`` survives, finish the swap (it holds the
       complete compacted table); else restore ``.old``.
     """
-    import shutil
-
-    for sub in (BANDS_DIR, SETS_DIR, PAIRS_DIR, VERSIONS_DIR):
+    for sub in (DOCS_DIR, PAIRS_DIR):
         path = os.path.join(state_root, sub)
         tmp, old = path + ".compact", path + ".old"
         if os.path.isdir(path):
@@ -327,40 +286,30 @@ def recover_state(state_root: str) -> None:
 
 
 def compact_state(spark, state_root: str) -> None:
-    """Physically drop superseded rows: rewrite bands/sets to each
-    doc's live version and pairs to the live set. The periodic
-    maintenance job that keeps read-time reconciliation cheap; safe to
-    run between batches (never concurrently with one). Each table is
-    rewritten to a ``.compact`` sibling and swapped in via
-    :func:`_swap_in` (rename-aside, never delete-then-rename), so a
-    crash at ANY point leaves either the original or the compacted
-    table recoverable by :func:`recover_state`."""
+    """Physically drop superseded rows: rewrite ``docs`` to each doc's
+    live row and ``pairs`` to the live set. The periodic maintenance
+    job that keeps read-time reconciliation cheap; safe to run between
+    batches (never concurrently with one). Both tables are written to
+    ``.compact`` siblings first, then swapped in via :func:`_swap_in`
+    (rename-aside, never delete-then-rename), so a crash at ANY point
+    leaves either the original or the compacted table recoverable by
+    :func:`recover_state`. A crash between the two swaps is consistent
+    too: compacted pairs are live under either ``docs``."""
     recover_state(state_root)
-    versions = spark.read.parquet(os.path.join(state_root, VERSIONS_DIR))
-    lp = live_pairs(spark, state_root).persist()
-    lp.count()
-    for sub in (BANDS_DIR, SETS_DIR):
-        path = os.path.join(state_root, sub)
-        live = _live_rows(spark.read.parquet(path), versions).persist()
-        live.count()
-        live.write.mode("overwrite").parquet(path + ".compact")
-        live.unpersist()
-        _swap_in(path)
     pairs_path = os.path.join(state_root, PAIRS_DIR)
-    lp.write.mode("overwrite").parquet(pairs_path + ".compact")
-    lp.unpersist()
-    _swap_in(pairs_path)
-    latest = versions.groupBy("doc_id").agg(F.max("wb").alias("wb")).persist()
-    latest.count()
-    vp = os.path.join(state_root, VERSIONS_DIR)
-    latest.write.mode("overwrite").parquet(vp + ".compact")
-    latest.unpersist()
-    _swap_in(vp)
-    # Spark caches file listings per path; after the swap the old
-    # part-files are gone, so invalidate every rewritten directory or
-    # the next read fails with FILE_NOT_EXIST
-    for sub in (BANDS_DIR, SETS_DIR, PAIRS_DIR, VERSIONS_DIR):
-        spark.catalog.refreshByPath(os.path.join(state_root, sub))
+    docs_path = os.path.join(state_root, DOCS_DIR)
+    live_pairs(spark, state_root).write.mode("overwrite").parquet(
+        pairs_path + ".compact"
+    )
+    _live_rows(_read(spark, state_root, DOCS_DIR)).write.mode(
+        "overwrite"
+    ).parquet(docs_path + ".compact")
+    for path in (pairs_path, docs_path):
+        _swap_in(path)
+        # Spark caches file listings per path; after the swap the old
+        # part-files are gone, so invalidate the rewritten directory or
+        # the next read fails with FILE_NOT_EXIST
+        spark.catalog.refreshByPath(path)
 
 
 def run_maintenance_stream(

@@ -550,6 +550,26 @@ def test_catalog_shuffle_budget(spark):
     assert not bad, f"exchange-count drift: {bad}"
 
 
+def test_catalog_import_failure_raises(monkeypatch):
+    """A query module that fails to import must fail ``queries()``
+    loudly, not silently drop its queries (and every module listed
+    after it) from the catalog."""
+    import sys
+
+    from parcel_analytics_etl_notebook_spark import plans
+    from parcel_analytics_etl_notebook_spark.plans import catalog
+
+    mod = "parcel_analytics_etl_notebook_spark.plans.queries_llm7"
+    catalog.queries()  # the real catalog loads
+    monkeypatch.setattr(catalog, "_LOADED", False)
+    # a None entry in sys.modules makes the import raise
+    # ModuleNotFoundError, an ImportError like any broken module's
+    monkeypatch.delattr(plans, "queries_llm7")
+    monkeypatch.setitem(sys.modules, mod, None)
+    with pytest.raises(ImportError):
+        catalog.queries()
+
+
 def test_memo_frame_shares_and_releases(spark):
     """catalog.memo_frame: same session + sf + key → the SAME frame
     object (one build per sweep — VERDICT r05 #5); release_caches

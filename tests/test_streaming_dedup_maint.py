@@ -184,15 +184,61 @@ def test_recrawl_same_text_is_noop_for_live_pairs(spark, tmp_path):
     assert got.count() == got.distinct().count()
 
 
-def test_replay_after_crash_before_first_versions_append(spark, tmp_path):
-    """ADVICE r09 #1: batch 0 writes delta->bands->sets then dies BEFORE
-    the versions append. The checkpoint replay of batch 0 must not wedge
-    on the missing ledger (treat all standing rows as live), and after
+def test_recrawl_to_short_text_kills_old_pairs(spark, tmp_path):
+    """A re-crawl to text with fewer than 3 tokens has no shingles, so
+    the doc pairs with nothing — but its new row must still supersede
+    the old one, or the doc's stale pairs stay live. live_pairs equals
+    the batch recompute over the final corpus."""
+    from parcel_analytics_etl_notebook_spark.streaming.dedup_maintenance import (
+        live_pairs,
+    )
+
+    docs = (
+        spark.read.parquet(f"{SF}/documents.parquet")
+        .select("doc_id", "text")
+        .limit(300)
+        .cache()
+    )
+    b0 = docs.filter(F.col("doc_id") % 2 == 0)
+    b1 = docs.filter(F.col("doc_id") % 2 == 1)
+    state = _state_with_batches(spark, tmp_path, [(0, b0), (1, b1)])
+    paired = sorted(
+        {
+            r[0]
+            for r in live_pairs(spark, state)
+            .select(F.explode(F.array("id_a", "id_b")))
+            .collect()
+        }
+    )
+    assert paired  # the fixture genuinely has near-dups
+    short_ids = paired[::2]
+    short = docs.filter(F.col("doc_id").isin(short_ids)).select(
+        "doc_id", F.lit("short text").alias("text")
+    )
+    _state_with_batches(spark, tmp_path, [(2, short)])
+
+    final_corpus = docs.join(
+        short.select("doc_id"), "doc_id", "left_anti"
+    ).unionByName(short)
+    want = _batch_recompute(spark, final_corpus)
+    got = live_pairs(spark, state).select("id_a", "id_b")
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    stale = got.filter(
+        F.col("id_a").isin(short_ids) | F.col("id_b").isin(short_ids)
+    )
+    assert stale.count() == 0
+
+
+def test_replay_after_crash_before_first_docs_append(spark, tmp_path):
+    """ADVICE r09 #1: batch 0 writes its pairs then dies BEFORE the
+    first docs append. The checkpoint replay of batch 0 must not wedge
+    on the missing docs table (treat every pair as live), and after
     the replay + one more batch the live view equals the recompute."""
     import shutil
 
     from parcel_analytics_etl_notebook_spark.streaming.dedup_maintenance import (
-        VERSIONS_DIR,
+        DOCS_DIR,
         live_pairs,
         near_dup_maintenance_sink,
     )
@@ -208,9 +254,9 @@ def test_replay_after_crash_before_first_versions_append(spark, tmp_path):
     state = str(tmp_path / "state")
     sink = near_dup_maintenance_sink(state, threshold=0.2)
     sink(b0, 0)
-    # simulate the crash window: bands/sets/pairs landed, versions not
-    shutil.rmtree(os.path.join(state, VERSIONS_DIR))
-    # live_pairs on the ledgerless state must answer, not raise
+    # simulate the crash window: pairs landed, docs not
+    shutil.rmtree(os.path.join(state, DOCS_DIR))
+    # live_pairs on the docs-less state must answer, not raise
     assert live_pairs(spark, state).count() >= 0
     sink(b0, 0)  # checkpoint replay of the same batch
     sink(b1, 1)
@@ -335,7 +381,7 @@ def test_compaction_crash_injection_recovers(spark, tmp_path, monkeypatch):
     assert os.path.isdir(pairs)
     assert not os.path.isdir(pairs + ".old")
     assert not os.path.isdir(pairs + ".compact")
-    for sub in (dm.BANDS_DIR, dm.SETS_DIR, dm.PAIRS_DIR, dm.VERSIONS_DIR):
+    for sub in (dm.DOCS_DIR, dm.PAIRS_DIR):
         spark.catalog.refreshByPath(os.path.join(state, sub))
     got = sorted(
         map(
